@@ -985,10 +985,11 @@ dates AS (
          CAST(CAST(trunc(epoch(d) / n) AS BIGINT) AS VARCHAR) AS obj_resolved
   FROM (
     SELECT subj_norm, pred_canon, d,
-           row_number() OVER (PARTITION BY subj_norm, pred_canon ORDER BY ts DESC) AS rn,
+           row_number() OVER (PARTITION BY subj_norm, pred_canon
+                              ORDER BY ts DESC, obj_raw ASC) AS rn,
            count(*) OVER (PARTITION BY subj_norm, pred_canon) AS n
     FROM (
-      SELECT subj_norm, pred_canon, ts,
+      SELECT subj_norm, pred_canon, ts, obj_raw,
              """ + _duck_date_tries("obj_raw") + """ AS d
       FROM mcells WHERE dtype_major = 'date'
     ) WHERE d IS NOT NULL

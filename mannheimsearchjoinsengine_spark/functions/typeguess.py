@@ -89,6 +89,3 @@ def parse_numeric(col: Column) -> Column:
     Spark 4 ANSI mode would otherwise throw on non-numeric strings)."""
     return F.regexp_replace(F.trim(col), ",", "").try_cast("double")
 
-
-def duck_parse_numeric(expr: str) -> str:
-    return f"try_cast(replace(trim({expr}), ',', '') AS DOUBLE)"

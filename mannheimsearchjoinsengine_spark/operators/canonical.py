@@ -177,9 +177,14 @@ def connected_components(
         driver_max_edges = CC_DRIVER_MAX_EDGES
     all_string = all(f.dataType.simpleString() == "string" for f in e.schema.fields)
     if 0 < n_edges <= driver_max_edges and all_string:
+        import pandas as pd
+
         comp = _cc_driver([(r["src"], r["dst"]) for r in e.collect()])
+        # from pandas through Arrow: the batches are decoded in the JVM, so
+        # no Python worker starts (a list would run a PythonRDD job)
         return e.sparkSession.createDataFrame(
-            sorted(comp.items()), schema="node string, component string"
+            pd.DataFrame(sorted(comp.items()), columns=["node", "component"]),
+            schema="node string, component string",
         )
     converged = n_edges == 0
     for _ in range(max_iter):

@@ -23,12 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mannheimsearchjoinsengine_spark.operators.profile import pred_major_dtype
+
 
 def evidence(cells: DataFrame) -> DataFrame:
-    """Distinct (pred, subj, obj) evidence, materialized once — it feeds
-    several branches (sizes, both self-join sides, the all-preds set) and
-    is schema×entity-sized (tiny) after the one corpus-wide distinct."""
-    return cells.select("pred_raw", "subj_norm", "obj_raw").distinct().localCheckpoint()
+    """Distinct (pred, subj, obj) evidence — it feeds several branches
+    (sizes, both self-join sides, the all-preds set) of one plan, which
+    share its exchange through Spark's exchange reuse; it is
+    schema×entity-sized (tiny) after the one corpus-wide distinct."""
+    return cells.select("pred_raw", "subj_norm", "obj_raw").distinct()
 
 
 def pred_pair_scores(cells: DataFrame, ev: DataFrame | None = None) -> DataFrame:
@@ -82,7 +85,7 @@ def pred_merge_map(cells: DataFrame, tau: float = 0.7, min_shared: int = 2) -> D
     can plain-join on pred_raw.
     """
     ev = evidence(cells)
-    scores = pred_pair_scores(cells, ev).localCheckpoint().filter(
+    scores = pred_pair_scores(cells, ev).filter(
         (F.col("containment") >= tau) & (F.col("shared") >= min_shared)
     )
     edges = scores.select(
@@ -107,7 +110,7 @@ def pred_merge_map(cells: DataFrame, tau: float = 0.7, min_shared: int = 2) -> D
         .groupBy("pred_raw")
         .agg(F.min("pred_canon").alias("pred_canon"))
     )
-    # derive from the materialized evidence — not another full-corpus pass
+    # derive from the evidence (reused exchange) — not another full-corpus pass
     all_preds = ev.select("pred_raw").distinct()
     return (
         all_preds.join(mapping, "pred_raw", "left")
@@ -118,26 +121,9 @@ def pred_merge_map(cells: DataFrame, tau: float = 0.7, min_shared: int = 2) -> D
     )
 
 
-def apply_pred_merge(cells: DataFrame, merge_map: DataFrame) -> DataFrame:
-    """Rewrite cells onto canonical predicates (broadcast map join)."""
-    return cells.join(F.broadcast(merge_map), "pred_raw").withColumn(
-        "pred_canon", F.col("pred_canon")
-    )
-
-
 # ---------------------------------------------------------------------------
 # A3 full form — typed instance-based column scoring
 # ---------------------------------------------------------------------------
-
-def _pred_major_dtype(cells: DataFrame) -> DataFrame:
-    votes = cells.groupBy("pred_raw", "dtype").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("pred_raw").orderBy(F.desc("n"), F.asc("dtype"))
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pred_raw", F.col("dtype").alias("dtype_major"))
-    )
-
 
 def _typed_score(dtype, v1, v2, range_days):
     """Per-dtype value kernel, reference-exact including its quirks
@@ -221,7 +207,7 @@ def typed_pair_scores(cells: DataFrame) -> DataFrame:
     rep = (
         cells.withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") == 1)
-        .join(F.broadcast(_pred_major_dtype(cells)), "pred_raw")
+        .join(F.broadcast(pred_major_dtype(cells)), "pred_raw")
         .select("pred_raw", "subj_norm", "obj_raw", "dtype_major")
         .localCheckpoint()
     )

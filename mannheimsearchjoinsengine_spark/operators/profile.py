@@ -31,27 +31,28 @@ def typed_cells(facts: DataFrame) -> DataFrame:
     return facts.withColumn("dtype", guess_type(F.col("obj_raw")))
 
 
-def pred_profile(cells: DataFrame) -> DataFrame:
-    """Per-predicate profile: majority dtype + stats (P7 + P8).
-
-    Majority vote = max_by(count) with (count desc, dtype asc) tie-break —
-    two shuffles on `pred_raw` (dtype vote needs the (pred, dtype) grain),
-    both tiny after map-side partial agg.
-    """
+def pred_major_dtype(cells: DataFrame) -> DataFrame:
+    """Per-predicate majority dtype (P7): max count, tie → dtype asc. One
+    shuffle on (pred_raw, dtype), tiny after map-side partial agg, and a
+    window on pred_raw over the vote grain."""
     votes = cells.groupBy("pred_raw", "dtype").agg(F.count("*").alias("n"))
     w = Window.partitionBy("pred_raw").orderBy(F.desc("n"), F.asc("dtype"))
-    majority = (
+    return (
         votes.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("pred_raw", F.col("dtype").alias("dtype_major"))
     )
+
+
+def pred_profile(cells: DataFrame) -> DataFrame:
+    """Per-predicate profile: majority dtype + stats (P7 + P8)."""
     stats = cells.groupBy("pred_raw").agg(
         F.count("*").alias("n_values"),
         F.countDistinct("obj_raw").alias("n_distinct"),
         F.round(F.avg(F.length("obj_raw")), 4).alias("avg_len"),
         F.countDistinct("subj_norm").alias("n_subjects"),
     )
-    return stats.join(majority, "pred_raw")
+    return stats.join(pred_major_dtype(cells), "pred_raw")
 
 
 def value_multiplicity(cells: DataFrame) -> DataFrame:

@@ -213,27 +213,6 @@ def resolve_first(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFra
     )
 
 
-def resolve_longest(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A6 longest-string mode (``getLargestValue:446-457``; first value with
-    the max length wins)."""
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc(F.length("obj_raw")), F.asc("ts"), F.asc("obj_raw")
-    )
-    return (
-        cells.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
-    )
-
-
-def resolve_average(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
-    """A6 average mode (``getAverageFromList:423-430``)."""
-    vals = cells.withColumn("num", parse_numeric(F.col("obj_raw"))).filter(
-        F.col("num").isNotNull()
-    )
-    return vals.groupBy(*keys).agg(F.round(F.avg("num"), 4).alias("obj_resolved"))
-
-
 def resolve_date_average(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> DataFrame:
     """A6 date-average replicating the last-date-only bug: result =
     trunc(epoch_seconds(last date) / n)."""
@@ -271,87 +250,73 @@ def resolve_dispatch(cells: DataFrame, keys=("subj_norm", "pred_canon")) -> Data
     """Full dispatch over the group's majority dtype:
     string→voting, numeric/unit→median, date→date-average-bug,
     else→first. Output obj_resolved is always a string (the reference's
-    all-strings model).
+    all-strings model); a numeric- or date-major group with no parseable
+    value emits no row.
 
-    Shape: one value_grain shuffle over the corpus, then all four branches
-    run on the materialized grain (an earlier version joined dtype_major
-    back onto the full cell table and fanned THAT into four branches —
-    measured 67 s vs ~15 s at 8M turns)."""
+    Shape: one keyed pass, two shuffle exchanges, no checkpoint. The value
+    grain (map-side partial aggregation, one exchange) is repartitioned
+    once on ``keys``. Within those partitions, windows derive the per-dtype
+    counts, the majority dtype, the median's cumulative counts and the
+    latest parseable date; one ``groupBy(keys)`` on the same partitioning
+    then picks the voting, median, date or first result by majority dtype.
+    Numbers are parsed only in numeric/unit-major groups, dates only in
+    date-major ones."""
     keys = list(keys)
-    g = value_grain(cells, keys).localCheckpoint()
-    wd = Window.partitionBy(*keys).orderBy(F.desc("dn"), F.asc("dtype"))
-    major = (
-        g.groupBy(*keys, "dtype")
-        .agg(F.sum("cnt").alias("dn"))
-        .withColumn("rn", F.row_number().over(wd))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("dtype").alias("dtype_major"))
+    by_key = Window.partitionBy(*keys)
+    g = (
+        value_grain(cells, keys)
+        .repartition(*keys)
+        .withColumn("dn", F.sum("cnt").over(Window.partitionBy(*keys, "dtype")))
+        # majority dtype: most cells, tie → dtype asc
+        .withColumn(
+            "dtype_major", F.min(F.struct(-F.col("dn"), "dtype")).over(by_key)["dtype"]
+        )
     )
-    gm = g.join(major, keys)
-
-    # voting: cnt desc, then first value to reach the max (= min last_ts)
-    wv = Window.partitionBy(*keys).orderBy(
-        F.desc("cnt"), F.asc("last_ts"), F.asc("obj_raw")
-    )
-    voting = (
-        gm.filter(F.col("dtype_major") == "string")
-        .withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
-    )
+    major = F.col("dtype_major")
 
     # median: row-indexed upper median from (num, cnt) cumulative ranges —
     # equal nums are adjacent in the reference's (num, ts) row order, so the
     # value at the picked index only depends on counts.
-    med_vals = (
-        gm.filter(F.col("dtype_major").isin("numeric", "unit"))
-        .withColumn(
-            "num",
-            parse_numeric(
-                F.regexp_extract("obj_raw", r"^(-?[0-9][0-9,]*(\.[0-9]+)?)", 1)
-            ),
-        )
-        .filter(F.col("num").isNotNull())
+    num = parse_numeric(F.regexp_extract("obj_raw", r"^(-?[0-9][0-9,]*(\.[0-9]+)?)", 1))
+    g = g.withColumn("num", F.when(major.isin("numeric", "unit"), num))
+    num_cnt = F.when(F.col("num").isNotNull(), F.col("cnt"))
+    by_num = by_key.orderBy("num", "first_ts").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    wm = Window.partitionBy(*keys).orderBy(F.asc("num"), F.asc("first_ts"))
-    wn = Window.partitionBy(*keys)
-    med_ranked = (
-        med_vals.withColumn("cum", F.sum("cnt").over(wm))
-        .withColumn("n", F.sum("cnt").over(wn))
+    g = g.withColumn("cum", F.sum(num_cnt).over(by_num)).withColumn(
+        "n", F.sum(num_cnt).over(by_key)
     )
     pick = F.when(F.col("n") == 1, F.lit(1).cast("double")).when(
         F.col("n") % 2 == 0, F.col("n") / 2 + 1
     ).otherwise(F.floor(F.col("n") / 2) + 2)
-    med = med_ranked.filter(
-        (F.col("cum") - F.col("cnt") < pick) & (pick <= F.col("cum"))
-    ).select(*keys, F.col("num").cast("string").alias("obj_resolved"))
+    picked = (F.col("cum") - F.col("cnt") < pick) & (pick <= F.col("cum"))
 
-    # date-average bug: epoch(last date by ts) / n (ts unique per turn)
-    dvals = (
-        gm.filter(F.col("dtype_major") == "date")
-        .withColumn("d", parse_any_date(F.col("obj_raw")))
-        .filter(F.col("d").isNotNull())
+    # date-average bug: epoch(last date) / n; the last date is the latest
+    # ts, tie → obj_raw asc (two merged raw predicates in one turn)
+    g = g.withColumn("d", F.when(major == "date", parse_any_date(F.col("obj_raw"))))
+    by_last = by_key.orderBy(F.col("d").isNull(), F.desc("last_ts"), F.asc("obj_raw"))
+    g = g.withColumn("rd", F.row_number().over(by_last))
+
+    out = g.groupBy(*keys, "dtype_major").agg(
+        # voting: cnt desc, then first value to reach the max (= min last_ts)
+        F.min(F.struct(-F.col("cnt"), "last_ts", "obj_raw"))["obj_raw"].alias("voted"),
+        F.max(F.when(picked, F.col("num"))).alias("median"),
+        F.max(F.when((F.col("rd") == 1) & F.col("d").isNotNull(), F.col("d"))).alias("d"),
+        F.sum(F.when(F.col("d").isNotNull(), F.col("cnt"))).alias("n_dates"),
+        # first: min ts row (unique), tie-break obj asc matches resolve_first
+        F.min(F.struct("first_ts", "obj_raw"))["obj_raw"].alias("first"),
     )
-    wdt = Window.partitionBy(*keys).orderBy(F.desc("last_ts"))
-    dates = (
-        dvals.withColumn("rn", F.row_number().over(wdt))
-        .withColumn("n", F.sum("cnt").over(wn))
-        .filter(F.col("rn") == 1)
-        .select(
-            *keys,
-            (F.unix_timestamp(F.col("d").cast("timestamp")) / F.col("n"))
+    resolved = (
+        F.when(major == "string", F.col("voted"))
+        .when(major.isin("numeric", "unit"), F.col("median").cast("string"))
+        .when(
+            major == "date",
+            (F.unix_timestamp(F.col("d").cast("timestamp")) / F.col("n_dates"))
             .cast("long")
-            .cast("string")
-            .alias("obj_resolved"),
+            .cast("string"),
         )
+        .otherwise(F.col("first"))
     )
-
-    # first: min ts row (unique), tie-break obj asc matches resolve_first
-    wf = Window.partitionBy(*keys).orderBy(F.asc("first_ts"), F.asc("obj_raw"))
-    rest = (
-        gm.filter(~F.col("dtype_major").isin("string", "numeric", "unit", "date"))
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select(*keys, F.col("obj_raw").alias("obj_resolved"))
+    return out.select(*keys, resolved.alias("obj_resolved")).filter(
+        F.col("obj_resolved").isNotNull()
     )
-    return voting.unionByName(med).unionByName(dates).unionByName(rest)

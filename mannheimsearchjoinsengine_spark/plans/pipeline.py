@@ -22,7 +22,7 @@ from mannheimsearchjoinsengine_spark.operators.extract import extract_facts, ext
 from mannheimsearchjoinsengine_spark.operators.index import build_attributes, build_postings
 from mannheimsearchjoinsengine_spark.operators.match import pred_merge_map
 from mannheimsearchjoinsengine_spark.operators.probe import join_results
-from mannheimsearchjoinsengine_spark.operators.profile import pred_profile, typed_cells
+from mannheimsearchjoinsengine_spark.operators.profile import pred_major_dtype, typed_cells
 from mannheimsearchjoinsengine_spark.operators.resolve import resolve_dispatch
 from mannheimsearchjoinsengine_spark.operators.triplify import to_triples
 from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
@@ -42,7 +42,14 @@ def run_pipeline(
     """Run all stages; returns every intermediate plus the triple table.
 
     With ``checkpoint_root`` set, each stage materializes through the ledger
-    (kill + re-run resumes from the last completed stage).
+    (kill + re-run resumes from the last completed stage): every stage,
+    ``triples`` included, is one flat parquet directory read back with its
+    recorded schema, so a resumed stage starts no Spark job. ``triples``
+    keeps its ``subj_bucket`` column; the partitioned triple table is
+    written by the output paths (``jobs/run_pipeline.py --output``,
+    ``catalog.write_table``). A subtree that one stage's plan consumes twice
+    (the evidence of ``pred_merge_map``) is shared through Spark's exchange
+    reuse, not checkpointed.
 
     ``broadcast_mode`` gates every small-side broadcast hint in the plan:
     ``"auto"`` (default) broadcasts only when the side's *measured* row
@@ -113,17 +120,16 @@ def run_pipeline(
         # fingerprint from the parquet footer — no Spark job for a row count
         fingerprint = f"{sf_dir}:{_input_rows(sf_dir)}" if ledger else ""
 
-    def stage(name: str, build, partition_by=None) -> DataFrame:
+    def stage(name: str, build) -> DataFrame:
         # label the stage's jobs in the Spark UI / REST metrics
         spark.sparkContext.setJobDescription(f"kg-stage:{name}")
         if ledger is None:
-            # Cut lineage at every stage boundary: downstream stages fan the
-            # upstream subtree into several branches (resolve dispatch alone
-            # embeds it 4×), and an uncut plan tree re-runs whole subtrees —
+            # Cut lineage at every stage boundary: cells alone feeds every
+            # later stage, and an uncut plan tree re-runs whole subtrees —
             # measured 177 s vs ~90 s at 2M turns for a lazy vs materialized
             # DAG. The ledger path materializes to parquet instead.
             return build().localCheckpoint()
-        return ledger.materialize(name, fingerprint, build, partition_by)
+        return ledger.materialize(name, fingerprint, build)
 
     def stage_rows(name: str, df: DataFrame) -> int:
         # measured size of a materialized stage, for broadcast gating: free
@@ -207,9 +213,9 @@ def run_pipeline(
         dtypes_f = pool.submit(
             stage,
             "pred_dtypes",
-            lambda: pred_profile(
-                cells_canon.withColumn("pred_raw", F.col("pred_canon"))
-            ).select(F.col("pred_raw").alias("pred_canon"), "dtype_major"),
+            lambda: pred_major_dtype(
+                cells_canon.select(F.col("pred_canon").alias("pred_raw"), "dtype")
+            ).withColumnRenamed("pred_raw", "pred_canon"),
         )
         resolved = resolved_f.result()
         clusters = clusters_f.result()
@@ -222,7 +228,6 @@ def run_pipeline(
                 dtypes,
                 broadcast_clusters=small("clusters", clusters),
             ),
-            partition_by=["subj_bucket"],
         )
         postings = postings_f.result()
         attributes = attributes_f.result()

@@ -249,11 +249,13 @@ def triples(path: str, fuzzy: bool = False) -> set[tuple[str, str, str, str]]:
                 idx = 0 if n == 1 else (n // 2 if n % 2 == 0 else n // 2 + 1)
                 obj = repr(nums[idx][0])
         elif dmaj == "date":
-            ds = [(f["ts"], parse_date(f["obj"])) for f in fs_sorted]
-            ds = [(t, d) for t, d in ds if d is not None]
+            ds = [(f["ts"], f["obj"], parse_date(f["obj"])) for f in fs_sorted]
+            ds = [(t, o, d) for t, o, d in ds if d is not None]
             if ds:
                 n = len(ds)
-                last = max(ds, key=lambda td: td[0])[1]
+                # latest ts, tie → obj asc (the engines' rule)
+                top = max(t for t, _, _ in ds)
+                last = min((o, d) for t, o, d in ds if t == top)[1]
                 epoch = int(last.replace(tzinfo=timezone.utc).timestamp())
                 obj = str(int(epoch / n))  # truncation toward zero, like the engines
         else:

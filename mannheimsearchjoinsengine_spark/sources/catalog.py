@@ -3,15 +3,17 @@
 The reference memoizes stage results as Java-serialized blobs
 (``searchjoin/SearchJoin.saveResults:76-102``,
 ``schemamatching/Matcher.saveSimilarities:53-79``). Here every stage
-boundary is a TABLE: written partitioned, recorded in a JSON ledger with a
-content fingerprint, and reused on re-run when the fingerprint matches —
-which is exactly the north rule's "resumable from checkpoint" contract.
+boundary is a TABLE: written as flat parquet, recorded in a JSON ledger
+with a content fingerprint and the written schema, and reused on re-run
+when the fingerprint matches — which is exactly the north rule's
+"resumable from checkpoint" contract.
 
 Iceberg note: the north rule targets an Iceberg catalog; this sandbox has no
 Iceberg runtime jar (no network), so INTERNAL stage checkpoints are
-hive-layout partitioned parquet + ledger manifest (partition specs carry
-over unchanged). The pipeline EDGES already speak catalog-table identifiers
-— ``run_pipeline(input_table="kg.db.transcripts")`` reads via
+flat parquet + ledger manifest; the triple table's ``subj_bucket``
+partitioning is applied where it leaves the pipeline. Those EDGES already
+speak catalog-table identifiers —
+``run_pipeline(input_table="kg.db.transcripts")`` reads via
 ``spark.read.table`` and :func:`write_table` materializes the triple table
 via ``writeTo(...).createOrReplace`` — so on a cluster, configuring
 ``spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog`` and passing
@@ -103,14 +105,23 @@ class StageLedger:
         stage: str,
         fingerprint: str,
         build,  # () -> DataFrame
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Return the stage table, building + persisting only when the
         checkpoint is missing or stale. Also writes a per-partition lineage
-        row set (stage, partition_id, rows) next to the data."""
+        row set (stage, partition_id, rows) next to the data.
+
+        Every stage is written flat (no partition directories) and read back
+        with the schema it was written with, which the entry records: a
+        schema-less read would cost one Spark job for schema inference per
+        stage, on resume as well. An entry without a schema is stale."""
         out = os.path.join(self.root, stage)
         ent = self.entries.get(stage)
-        if ent and ent.get("fingerprint") == fingerprint and os.path.exists(out):
+        if (
+            ent
+            and ent.get("fingerprint") == fingerprint
+            and "schema" in ent
+            and os.path.exists(out)
+        ):
             # torn-write guard: only resume when the files on disk still
             # carry the row count recorded at write time (parquet footers,
             # driver-side, no Spark job). A crash between the data write
@@ -122,14 +133,11 @@ class StageLedger:
             except Exception:
                 on_disk = None
             if on_disk == ent.get("rows"):
-                return self.spark.read.parquet(out)
+                return self._read(out, ent["schema"])
         t0 = time.time()
         df = build()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
-        persisted = self.spark.read.parquet(out)
+        schema = df.schema.json()
+        df.write.mode("overwrite").parquet(out)
         # ZERO-job metrics pass: per-partition row counts come straight from
         # the written files' parquet FOOTERS (driver-side metadata reads,
         # milliseconds) and the lineage table is written driver-side with
@@ -147,11 +155,17 @@ class StageLedger:
                 "fingerprint": fingerprint,
                 "path": out,
                 "rows": rows,
+                "schema": schema,
                 "wall_s": round(time.time() - t0, 3),
                 "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
             self._save()
-        return persisted
+        return self._read(out, schema)
+
+    def _read(self, out: str, schema: str) -> DataFrame:
+        from pyspark.sql.types import StructType
+
+        return self.spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(out)
 
     def lineage(self) -> DataFrame | None:
         p = os.path.join(self.root, "_lineage")

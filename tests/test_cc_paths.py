@@ -50,3 +50,16 @@ def test_gate_is_measured_not_assumed(spark):
 def test_empty_edges(spark):
     edges = spark.createDataFrame([], schema="src string, dst string")
     assert connected_components(edges).count() == 0
+
+
+def test_non_string_ids_take_the_distributed_rounds(spark):
+    # the driver path is string-only: integer node ids fall through to the
+    # star rounds (their bigint output type shows it) with the same
+    # min-id components
+    edges = spark.createDataFrame(
+        [(2, 1), (1, 2), (2, 3), (24, 25), (25, 26), (26, 24), (17, 17)],
+        schema="src bigint, dst bigint",
+    )
+    comp = connected_components(edges)
+    assert dict(comp.dtypes) == {"node": "bigint", "component": "bigint"}
+    assert dict(map(tuple, comp.collect())) == {1: 1, 2: 1, 3: 1, 24: 24, 25: 24, 26: 24}

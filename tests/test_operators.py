@@ -16,6 +16,7 @@ from mannheimsearchjoinsengine_spark.functions.typeguess import guess_type
 from mannheimsearchjoinsengine_spark.operators.canonical import connected_components
 from mannheimsearchjoinsengine_spark.operators.resolve import (
     resolve_date_average,
+    resolve_dispatch,
     resolve_median,
     resolve_voting,
 )
@@ -63,6 +64,77 @@ def test_date_average_last_date_bug(spark):
     df = _cells(spark, ["2000-01-01", "1970-01-03"], dtype="date")
     out = resolve_date_average(df).collect()[0]
     assert out.avg_epoch_s == (2 * 86400) // 2  # last date epoch / n
+
+
+# (subj_norm, pred_canon) group → [(obj_raw, dtype, ts offset in seconds)]
+DISPATCH_CELLS = {
+    # vote tie: b reaches 2 (at t2) before a does (at t3)
+    ("s", "vote_tie"): [
+        ("a", "string", 0), ("b", "string", 1), ("b", "string", 2), ("a", "string", 3),
+    ],
+    ("s", "median_one"): [("5", "numeric", 0)],
+    # even n=4 → the upper middle, values[2]
+    ("s", "median_even"): [
+        ("4", "numeric", 0), ("1", "numeric", 1), ("3", "numeric", 2), ("2", "numeric", 3),
+    ],
+    # odd n=3 after dropping the unparseable value → values[n/2+1]; the
+    # grouping comma and the unit suffix are stripped before the parse
+    ("s", "median_odd"): [
+        ("1,500", "numeric", 0), ("10 km", "unit", 1), ("n/a", "numeric", 2), ("30", "numeric", 3),
+    ],
+    # dtype tie 1:1 → 'numeric' < 'string', so the median branch
+    ("s", "major_tie"): [("x", "string", 0), ("7", "numeric", 1)],
+    # date-major but nothing parses → no row
+    ("s", "date_none"): [("2020-13-45", "date", 0), ("31/31/2031", "date", 1)],
+    # two dates in the latest turn (merged raw predicates): latest ts, then
+    # obj_raw asc → 1970-01-03; n=3 counts every parseable date
+    ("s", "date_tie"): [
+        ("1999-05-05", "date", 0), ("2000-01-01", "date", 5), ("1970-01-03", "date", 5),
+        ("soon", "date", 6),
+    ],
+    # first branch: earliest ts wins, whatever the row order
+    ("s", "first"): [("true", "bool", 9), ("false", "bool", 2), ("yes", "bool", 4)],
+}
+DISPATCH_EXPECTED = {
+    ("s", "vote_tie", "b"),
+    ("s", "median_one", "5.0"),
+    ("s", "median_even", "3.0"),
+    ("s", "median_odd", "1500.0"),
+    ("s", "major_tie", "7.0"),
+    ("s", "date_tie", str(2 * 86400 // 3)),
+    ("s", "first", "false"),
+}
+
+
+def _dispatch_cells(spark, path):
+    base = dt.datetime(2026, 1, 1)
+    rows = [
+        (subj, pred, obj, dtype, base + dt.timedelta(seconds=off))
+        for (subj, pred), vals in DISPATCH_CELLS.items()
+        for obj, dtype, off in vals
+    ]
+    spark.createDataFrame(
+        rows, "subj_norm string, pred_canon string, obj_raw string, dtype string, ts timestamp"
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_resolve_dispatch_branches(spark, tmp_path):
+    cells = _dispatch_cells(spark, str(tmp_path / "cells"))
+    got = {tuple(r) for r in resolve_dispatch(cells).collect()}
+    assert got == DISPATCH_EXPECTED
+
+
+def test_resolve_dispatch_is_one_keyed_pass(spark, tmp_path):
+    """Value grain + one exchange on the keys: at most two shuffle
+    exchanges, and no checkpoint (a checkpointed RDD scans as ExistingRDD;
+    the input here is a parquet scan)."""
+    import re
+
+    cells = _dispatch_cells(spark, str(tmp_path / "cells"))
+    plan = resolve_dispatch(cells)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) <= 2, plan
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_norm_key_variants(spark):

@@ -198,3 +198,49 @@ def test_pipeline_catalog_table_io(spark, sf_dir, tmp_path):
             )
     finally:
         spark.sql("DROP DATABASE IF EXISTS kgtest CASCADE")
+
+
+def test_ledger_resume_starts_no_job(spark, sf_dir, tmp_path_factory):
+    """Every stage of a complete ledger resumes without a Spark job: the
+    footer check is driver-side and the read-back uses the schema the
+    entry recorded (no schema-inference job). An entry without a schema is
+    stale and rebuilds to the same triples."""
+    import json
+
+    import pytest
+
+    from mannheimsearchjoinsengine_spark.sources.catalog import StageLedger
+
+    root = str(tmp_path_factory.mktemp("ckpt_schema"))
+    t1 = sorted(map(tuple, run_pipeline(spark, sf_dir, checkpoint_root=root)["triples"].collect()))
+
+    ledger = StageLedger(spark, root)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("ledger-resume", "resume every stage from a complete ledger")
+    try:
+        resumed = {
+            name: ledger.materialize(
+                name, ent["fingerprint"], lambda: pytest.fail("stage rebuilt")
+            )
+            for name, ent in ledger.entries.items()
+        }
+        assert tracker.getJobIdsForGroup("ledger-resume") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(map(tuple, resumed["triples"].collect())) == t1
+
+    path = f"{root}/_ledger.json"
+    with open(path) as f:
+        entries = json.load(f)
+    before = entries["triples"].pop("schema")
+    entries["triples"]["finished_at"] = "stale"
+    with open(path, "w") as f:
+        json.dump(entries, f)
+    t2 = sorted(map(tuple, run_pipeline(spark, sf_dir, checkpoint_root=root)["triples"].collect()))
+    with open(path) as f:
+        rebuilt = json.load(f)["triples"]
+    assert rebuilt["finished_at"] != "stale"
+    assert rebuilt["schema"] == before
+    assert t2 == t1
